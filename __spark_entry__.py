@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from dynaalign_spark import annsearch, rpath, textops  # noqa: E402
+from dynaalign_spark import annsearch, rpath, textops, tiers  # noqa: E402
 from dynaalign_spark.config import PARITY, SCALE  # noqa: E402
 from dynaalign_spark.operators.clusterbreak import clusterbreak_spark  # noqa: E402
 from dynaalign_spark.operators.lsh import candidate_pairs  # noqa: E402
@@ -457,17 +457,9 @@ def q_multitier_clusters(spark, sf_dir):
     separately at r02). The Louvain-refined merge stays pytest-gated in
     tests/test_job_multitier.py."""
     images = _docs_as_images(spark, sf_dir)
-    caps = images.select("image_id", "caption")
-    sub = textops.suffix_candidates(
-        caps, prefix_len=24, min_suffix=16,
-        id_col="image_id", text_col="caption",
-    ).select(F.col("contained").alias("a"), F.col("container").alias("b"))
-    lcp = textops.shared_substring_pairs(
-        caps, min_len=32, prefix_cap=48, id_col="image_id", text_col="caption",
-    ).select("a", "b")
-    res = clusterbreak_spark(
-        images, CC_CFG, extra_edges=sub.unionByName(lcp),
-    )
+    extra = tiers.build_all(tiers.tier_edges(
+        images, CC_CFG, pixel=False, substring_mode="both", min_len=32))
+    res = clusterbreak_spark(images, CC_CFG, extra_edges=extra)
     return _canonical_clusters(res)
 
 
@@ -1545,6 +1537,9 @@ def _duck_msa_golden() -> str | None:
         return s.replace("'", "''")
 
     rows = json.load(open(path))
+    if not rows:
+        # `values ()` is not valid SQL; no golden rows means no oracle
+        return None
     vals = ", ".join(
         f"('{esc(c)}', '{esc(cons)}', '{esc(ex)}', {int(sz)})"
         for c, cons, ex, sz in rows

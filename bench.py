@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import subprocess
 import sys
 import time
@@ -48,26 +50,33 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
 # every later JVM on this 126 GB box. Graceful exits are cleaned by Spark;
 # this cleans the crash case (next run's sweep removes dirs with no live
 # owner pid).
-if os.path.isdir("/dev/shm"):
-    _shm_root = "/dev/shm/spark-local"
-    if "SPARK_LOCAL_DIRS" not in os.environ:
-        import atexit
-        import shutil
+SHM_ROOT = "/dev/shm/spark-local"
 
-        # sweep residue whose owning pid is gone (crashed earlier runs)
-        if os.path.isdir(_shm_root):
-            for _d in os.listdir(_shm_root):
-                _p = os.path.join(_shm_root, _d)
-                try:
-                    _pid = int(_d.split("-")[-1])
-                    alive = os.path.exists(f"/proc/{_pid}")
-                except ValueError:
-                    alive = False
-                if not alive:
-                    shutil.rmtree(_p, ignore_errors=True)
-        _mine = os.path.join(_shm_root, f"pid-{os.getpid()}")
-        os.environ["SPARK_LOCAL_DIRS"] = _mine
-        atexit.register(lambda: shutil.rmtree(_mine, ignore_errors=True))
+
+def sweep_shm_residue(root: str = SHM_ROOT) -> None:
+    """Remove the `pid-N` dirs under `root` whose owning pid is gone
+    (crashed earlier runs). Anything else under `root` is not ours to
+    delete: a live run's dir, or a dir another tool put there."""
+    if not os.path.isdir(root):
+        return
+    for d in os.listdir(root):
+        m = re.fullmatch(r"pid-(\d+)", d)
+        if m and not os.path.exists(f"/proc/{m.group(1)}"):
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+
+
+def use_shm_local_dirs() -> None:
+    """Point SPARK_LOCAL_DIRS at this run's own `pid-N` dir under /dev/shm
+    (removed at exit) after sweeping dead runs' dirs. Worker subprocesses
+    inherit the parent's dir; an explicit SPARK_LOCAL_DIRS wins."""
+    if not os.path.isdir("/dev/shm") or "SPARK_LOCAL_DIRS" in os.environ:
+        return
+    import atexit
+
+    sweep_shm_residue()
+    mine = os.path.join(SHM_ROOT, f"pid-{os.getpid()}")
+    os.environ["SPARK_LOCAL_DIRS"] = mine
+    atexit.register(lambda: shutil.rmtree(mine, ignore_errors=True))
 
 
 def images_parquet(spark, n_clusters: int = IMAGES_N_CLUSTERS) -> str:
@@ -114,7 +123,7 @@ def bench_queries(spark):
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
-    from dynaalign_spark import annsearch, textops
+    from dynaalign_spark import annsearch, textops, tiers
     from dynaalign_spark.config import SCALE
     from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
 
@@ -130,22 +139,12 @@ def bench_queries(spark):
     def dedup_multitier():
         """The north-rule multi-signal merge: caption MinHash ∪ pixel
         SimHash ∪ substring containment edges -> one cluster assignment."""
-        from dynaalign_spark.operators.simhash import pixel_edges
-
         images = spark.read.parquet(img_path)
         cfg = SCALE.with_(size_max=50, size_min=1,
                           cache_storage=_default_storage())
-        # PSNR-verified (the north-rule per-row invariant): unverified
-        # simhash candidates on smooth synthetic images weld 76% of the
-        # corpus into one mega-component (false near-dups) and trigger 4
-        # distributed-break rounds — verified edges are 12x fewer, the
-        # components stay honest, and the query runs 2-3x faster
-        px = pixel_edges(images, cfg, verify_psnr=True).select("a", "b")
-        sub = textops.suffix_candidates(
-            images.select("image_id", "caption"), prefix_len=24,
-            min_suffix=16, id_col="image_id", text_col="caption",
-        ).select(F.col("contained").alias("a"), F.col("container").alias("b"))
-        res = clusterbreak_spark(images, cfg, extra_edges=px.unionByName(sub))
+        extra = tiers.build_all(tiers.tier_edges(
+            images, cfg, pixel=True, substring_mode="containment"))
+        res = clusterbreak_spark(images, cfg, extra_edges=extra)
         return res["clusters"]
 
     def minhash_signatures():
@@ -246,15 +245,15 @@ def run_bench() -> dict:
 
 def _worker_dedup(cpus: int, n_reps: int = 2) -> None:
     """Subprocess body: one dedup job at local[cpus]; prints a JSON line."""
+    from dynaalign_spark import tiers
     from dynaalign_spark.config import SCALE
     from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
     from dynaalign_spark.session import get_spark
 
-    # DYNA_PARTS_MULT: shuffle partitions = mult x cores, applied identically
-    # at both parallelism levels (a scale-invariant sizing rule, so the
-    # N-vs-4N comparison stays fair); DYNA_SHUFFLE_PARTS overrides absolutely
-    mult = float(os.environ.get("DYNA_PARTS_MULT", "1"))
-    parts = int(os.environ.get("DYNA_SHUFFLE_PARTS", str(int(cpus * mult))))
+    # shuffle partitions = cores at both parallelism levels (a scale-invariant
+    # sizing rule, so the N-vs-4N comparison stays fair); DYNA_SHUFFLE_PARTS
+    # overrides absolutely
+    parts = int(os.environ.get("DYNA_SHUFFLE_PARTS", str(cpus)))
     spark = get_spark(app=f"dedup-scale-{cpus}", master=f"local[{cpus}]",
                       shuffle_partitions=parts, extra=_env_extra(),
                       input_bytes_hint=_scaling_input_bytes())
@@ -262,44 +261,16 @@ def _worker_dedup(cpus: int, n_reps: int = 2) -> None:
     path = scaling_parquet(spark)
     images = spark.read.parquet(path)
     n = images.count()
-    # verify-join strategy A/B knob (BENCH.md): override sig_broadcast_max
     cfg = SCALE.with_(size_max=50, size_min=1, cache_storage=_default_storage())
-    if os.environ.get("DYNA_SIG_BCAST_MAX"):
-        cfg = cfg.with_(sig_broadcast_max=int(os.environ["DYNA_SIG_BCAST_MAX"]))
-    tiers = _scale_tiers()
-
-    def extra_edges(imgs):
-        """DYNA_TIERS edge union — identical construction to bench's
-        dedup_multitier / jobs/dedup.py (PSNR-verified pixel SimHash,
-        substring containment)."""
-        from pyspark.sql import functions as F
-
-        from dynaalign_spark import textops
-        from dynaalign_spark.operators.simhash import pixel_edges
-
-        parts_ = []
-        if "pixel" in tiers:
-            parts_.append(pixel_edges(imgs, cfg, verify_psnr=True).select("a", "b"))
-        if "substring" in tiers:
-            parts_.append(textops.suffix_candidates(
-                imgs.select("image_id", "caption"), prefix_len=24,
-                min_suffix=16, id_col="image_id", text_col="caption",
-            ).select(F.col("contained").alias("a"),
-                     F.col("container").alias("b")))
-        out = parts_[0]
-        for p in parts_[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # DYNA_TIER_OVERLAP=0: A/B knob for the round-4 tier-overlap scheduling
-    # (background-thread materialization of the tier edges in a FAIR pool
-    # while the caption stages run; identical output, wall-clock only)
-    overlap = os.environ.get("DYNA_TIER_OVERLAP", "1") != "0"
+    scale_tiers = _scale_tiers()
 
     def run_once(imgs):
-        return clusterbreak_spark(
-            imgs, cfg, extra_edges=extra_edges(imgs) if tiers else None,
-            tier_overlap=overlap)
+        # DYNA_TIERS edge union, from the same builder as dedup_multitier
+        # and jobs/dedup.py
+        extra = tiers.build_all(tiers.tier_edges(
+            imgs, cfg, pixel="pixel" in scale_tiers,
+            substring_mode="containment" if "substring" in scale_tiers else None))
+        return clusterbreak_spark(imgs, cfg, extra_edges=extra)
 
     # warm the JVM (JIT), the Python UDF worker pool, and the parquet cache
     # with a miniature end-to-end run, so the timed run measures steady-state
@@ -326,7 +297,7 @@ def _worker_dedup(cpus: int, n_reps: int = 2) -> None:
             res[key].unpersist()
     dt = min(reps)
     print(json.dumps({"cpus": cpus, "rows": n, "out": n_out, "sec": round(dt, 3),
-                      "reps": [round(r, 3) for r in reps], "tiers": tiers,
+                      "reps": [round(r, 3) for r in reps], "tiers": scale_tiers,
                       "images_per_sec": round(n / dt, 1)}))
     spark.stop()
 
@@ -346,15 +317,12 @@ def _scaling_input_bytes() -> int | None:
 
 def _env_extra() -> dict:
     """DYNA_CONF='k=v;k=v' -> extra Spark conf (A/B knobs for BENCH.md);
-    DYNA_GC -> driver JVM options; DYNA_OFFHEAP -> off-heap memory size
-    ('0' disables)."""
+    DYNA_OFFHEAP -> off-heap memory size ('0' disables)."""
     extra = {}
     for kv in os.environ.get("DYNA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
-    if os.environ.get("DYNA_GC"):
-        extra["spark.driver.extraJavaOptions"] = os.environ["DYNA_GC"]
     # Off-heap execution+storage memory, default ON (r3 A/B, BENCH.md):
     # cached columnar batches and shuffle/execution buffers leave the GC
     # heap, decoupling the Python-heavy stages from earlier stages' cache
@@ -386,8 +354,6 @@ def _offheap_size() -> str:
     zero-size pool; the default is sized from MemAvailable so hosts smaller
     than the bench sandbox don't OOM (16g only when >=64 GiB is free,
     else a quarter of available, floor 1g)."""
-    import re
-
     raw = os.environ.get("DYNA_OFFHEAP")
     if raw is not None:
         raw = raw.strip().lower()
@@ -412,46 +378,11 @@ def _default_storage(extra: dict | None = None) -> str:
     (ADVICE r03 #3): DYNA_CONF can override the off-heap defaults via
     _env_extra's setdefault, and OFF_HEAP with a disabled/zero pool silently
     fails to cache — so decide from the merged conf, not DYNA_OFFHEAP."""
-    if os.environ.get("DYNA_STORAGE"):
-        return os.environ["DYNA_STORAGE"]
-    import re
-
     conf = _env_extra() if extra is None else extra
     enabled = conf.get("spark.memory.offHeap.enabled", "false").lower() == "true"
     size = conf.get("spark.memory.offHeap.size", "0").strip().lower()
     off = not enabled or not size or re.fullmatch(r"0+[kmgt]?b?", size)
     return "MEMORY_AND_DISK" if off else "OFF_HEAP"
-
-
-def _worker_profile(cpus: int) -> None:
-    """Like --worker but one timed rep with per-stage wall times (profile
-    dict) — the scaling-efficiency decomposition. Run under taskset."""
-    from dynaalign_spark.config import SCALE
-    from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
-    from dynaalign_spark.session import get_spark
-
-    spark = get_spark(app=f"dedup-profile-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus, extra=_env_extra())
-    spark.sparkContext.setLogLevel("ERROR")
-    images = spark.read.parquet(scaling_parquet(spark))
-    prof_cfg = SCALE.with_(size_max=50, size_min=1,
-                           cache_storage=_default_storage())
-    warm = clusterbreak_spark(images.limit(20_000), prof_cfg)
-    warm["clusters"].count()
-    for key in ("signatures", "pairs", "components"):
-        warm[key].unpersist()
-    for rep in range(2):
-        prof: dict = {}
-        t0 = time.time()
-        res = clusterbreak_spark(images, prof_cfg, profile=prof)
-        tr = time.time()
-        res["clusters"].count()
-        prof["refine"] = round(time.time() - tr, 3)
-        prof["total"] = round(time.time() - t0, 3)
-        print(json.dumps({"cpus": cpus, "rep": rep, "profile": prof}), flush=True)
-        for key in ("signatures", "pairs", "components"):
-            res[key].unpersist()
-    spark.stop()
 
 
 def _worker_gen() -> None:
@@ -483,7 +414,6 @@ def run_scaling() -> dict:
         [sys.executable, os.path.abspath(__file__), "--worker-gen"],
         capture_output=True, text=True, timeout=1800,
     )
-    import shutil
 
     def substrate_eff() -> dict:
         """Same-time-window hypervisor calibration: pure in-L1 ALU work at
@@ -499,22 +429,18 @@ def run_scaling() -> dict:
         return {f"alu_{lo}": round(a_lo), f"alu_{hi}": round(a_hi),
                 "eff": round(a_hi / (factor * a_lo), 3)}
 
-    # Schedule (DYNA_SCHEDULE): 'interleave' (default) runs FOUR single-rep
-    # workers lo,hi,lo,hi and takes the per-level best — both parallelism
-    # levels sample the same hypervisor-grant timeline. The old 'block'
-    # order (all lo reps, then all hi reps) is maximally exposed to a
-    # monotonic burst-credit drain: measured on 2026-08-18, a block run's
-    # 32-core leg ran 334.7s min where the SAME code/config/data measured
-    # 194.4s ninety minutes earlier, while its 8-core leg (first, on
-    # refilled credits) ran 227.3s — a raw "0.17 efficiency" that is pure
-    # substrate sequencing, no pipeline story at all. Interleaving cannot
-    # stop the grant from moving, but it stops the ordering from loading
-    # the dice for either level.
-    schedule = (
-        [(lo, 1), (hi, 1), (lo, 1), (hi, 1)]
-        if os.environ.get("DYNA_SCHEDULE", "interleave") == "interleave"
-        else [(lo, 2), (hi, 2)]
-    )
+    # Interleaved schedule: FOUR single-rep workers lo,hi,lo,hi, taking the
+    # per-level best — both parallelism levels sample the same
+    # hypervisor-grant timeline. The retired 'block' order (all lo reps,
+    # then all hi reps) is maximally exposed to a monotonic burst-credit
+    # drain: measured on 2026-08-18, a block run's 32-core leg ran 334.7s
+    # min where the SAME code/config/data measured 194.4s ninety minutes
+    # earlier, while its 8-core leg (first, on refilled credits) ran 227.3s
+    # — a raw "0.17 efficiency" that is pure substrate sequencing, no
+    # pipeline story at all (BENCH.md). Interleaving cannot stop the grant
+    # from moving, but it stops the ordering from loading the dice for
+    # either level.
+    schedule = [(lo, 1), (hi, 1), (lo, 1), (hi, 1)]
     runs: dict[int, list] = {lo: [], hi: []}
     sub = {"before": substrate_eff()}
     for cpus, n_reps in schedule:
@@ -553,7 +479,7 @@ def run_scaling() -> dict:
         "value": round(eff, 3),
         "unit": "ratio",
         "tiers": _scale_tiers(),
-        "schedule": os.environ.get("DYNA_SCHEDULE", "interleave"),
+        "schedule": "interleave",
         "substrate_alu": sub,
         "substrate_ceiling": round(ceiling, 3),
         "normalized_value": round(eff / ceiling, 3) if ceiling else None,
@@ -569,8 +495,6 @@ def run_skew() -> dict:
     corpus-sized band group, the case the group cap + chain pairing exists
     for. Prints wall/throughput + the uniform-corpus comparison is made in
     BENCH.md within the same substrate window."""
-    import shutil
-
     from dynaalign_spark.config import SCALE
     from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
     from dynaalign_spark.session import get_spark
@@ -710,10 +634,9 @@ def run_jaccard_ab() -> dict:
 
 
 if __name__ == "__main__":
+    use_shm_local_dirs()
     if len(sys.argv) > 1 and sys.argv[1] == "--worker-gen":
         _worker_gen()
-    elif len(sys.argv) > 2 and sys.argv[1] == "--worker-profile":
-        _worker_profile(int(sys.argv[2]))
     elif len(sys.argv) > 2 and sys.argv[1] == "--worker":
         _worker_dedup(int(sys.argv[2]),
                       n_reps=int(sys.argv[3]) if len(sys.argv) > 3 else 2)
@@ -729,7 +652,7 @@ if __name__ == "__main__":
         raise SystemExit(
             f"unknown mode {sys.argv[1]!r}; modes: --scaling | --skew | "
             f"--jaccard-ab | "
-            f"--worker N [reps] | --worker-profile N | --worker-gen | "
+            f"--worker N [reps] | --worker-gen | "
             f"(none = per-round bench at $SPARK_GRAFT_SF_DIR)"
         )
     else:

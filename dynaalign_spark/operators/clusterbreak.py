@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..louvain import louvain, louvain_mod
 from ..oracle import quantile_type7
+from ..session import background
 from .components import connected_components
 from .lsh import candidate_pairs
 from .signatures import add_signatures
@@ -376,7 +377,6 @@ def clusterbreak_spark(
     pairs: DataFrame | None = None,
     local_max: int = 1500,
     max_distributed_rounds: int = 12,
-    profile: dict | None = None,
     extra_edges: DataFrame | None = None,
     tier_overlap: bool = True,
 ) -> dict:
@@ -401,64 +401,36 @@ def clusterbreak_spark(
     is materialized on a background thread in scheduler pool "tier" while
     the caption stages (signatures -> pairs -> quantile) run, instead of
     being sequenced after them. Identical output (pinned by
-    tests/test_tier_overlap.py); wall-clock only. Forced off when
-    ``profile`` is set so per-stage wall times keep their attribution.
-
-    ``profile``: pass a dict to force + wall-time each stage boundary into it
-    (signatures / pairs / components / aggs) — the per-stage metrics feed the
-    north-rule lineage JSON and the scaling-efficiency decomposition in
-    BENCH.md. When None (default) no extra actions run.
+    tests/test_tier_overlap.py); wall-clock only.
     """
-    import time as _time
-
     from pyspark import StorageLevel
 
     cache_lvl = getattr(StorageLevel, cfg.cache_storage)
 
-    tier_bg = None
-    if extra_edges is not None and tier_overlap and profile is None:
-        # Tier overlap (round 4): sequencing the tier-edge eager checkpoint
-        # after signatures/pairs/quantile put ~minutes of images-only work on
-        # the critical path at bench scale. Kick its canonicalized pair set
-        # off on a background thread in its own FAIR pool so its tasks share
-        # slots with (and fill the idle gaps of) the caption stages — the
-        # driver-sequenced quantile jobs, stage tails, and Python-bound
-        # phases where JVM cores sit idle at high core counts. The `valid`
-        # semi-joins stay in the caller's thread below (they need the
-        # signature cache).
-        import threading
-
-        _canon_bg = (
+    canon = tier_join = None
+    if extra_edges is not None:
+        canon = (
             extra_edges.select(
                 F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
             .where(F.col("a") != F.col("b"))
             .dropDuplicates(["a", "b"])
         )
-        tier_bg = {}
+        if tier_overlap:
+            # Tier overlap (round 4): sequencing the tier-edge eager
+            # checkpoint after signatures/pairs/quantile put ~minutes of
+            # images-only work on the critical path at bench scale. Kick its
+            # canonicalized pair set off in the background (own FAIR pool)
+            # so its tasks share slots with (and fill the idle gaps of) the
+            # caption stages — the driver-sequenced quantile jobs, stage
+            # tails, and Python-bound phases where JVM cores sit idle at high
+            # core counts. The `valid` semi-joins stay in the caller's
+            # thread below (they need the signature cache).
+            tier_join = background(canon.localCheckpoint)
 
-        def _materialize_tier(canon=_canon_bg, out=tier_bg):
-            sc = canon.sparkSession.sparkContext
-            # PySpark pinned-thread mode (default since 3.2) maps this Python
-            # thread to its own JVM thread, so the pool property scopes to
-            # the tier jobs only; under a FIFO-mode context it is a no-op and
-            # the jobs still tail-fill idle slots.
-            sc.setLocalProperty("spark.scheduler.pool", "tier")
-            try:
-                out["df"] = canon.localCheckpoint()
-            except BaseException as e:  # re-raised in the joining thread
-                out["err"] = e
-
-        tier_bg["thread"] = threading.Thread(
-            target=_materialize_tier, name="tier-edges", daemon=True)
-        tier_bg["thread"].start()
-
-    t0 = _time.time()
     sig = signatures if signatures is not None else add_signatures(images, cfg)
     sig = sig.persist(cache_lvl)
     valid = sig.where(F.col("minhash").isNotNull())
     n_valid = valid.count()
-    if profile is not None:
-        profile["signatures"] = round(_time.time() - t0, 3)
     null_rows = sig.where(F.col("minhash").isNull()).select(
         "image_id", F.lit("empty_shingle_set").alias("reason")
     )
@@ -485,32 +457,15 @@ def clusterbreak_spark(
             n_rows_hint=n_valid,
         )
     prs = prs.persist(cache_lvl)
-    if profile is not None:
-        t0 = _time.time()
-        prs.count()
-        profile["pairs"] = round(_time.time() - t0, 3)
     if zero_quantile:
         thr = cfg.min_edge_sim
     else:
         thr = max(quantile_threshold(prs, n_valid, cfg.thresh_p), cfg.min_edge_sim)
     edges = threshold_edges(prs, thr)
     xtra = None
-    if extra_edges is not None:
-        t0 = _time.time()
-        if tier_bg is not None:
-            tier_bg["thread"].join()
-            if "err" in tier_bg:
-                raise tier_bg["err"]
-            canon = tier_bg["df"]
-        else:
-            canon = (
-                extra_edges.select(
-                    F.least("a", "b").alias("a"),
-                    F.greatest("a", "b").alias("b"),
-                )
-                .where(F.col("a") != F.col("b"))
-                .dropDuplicates(["a", "b"])
-            )
+    if canon is not None:
+        if tier_join is not None:
+            canon = tier_join()
         xtra = (
             canon.select("a", "b", F.lit(1.0).alias("sim"))
             # tier edges only connect signature-bearing nodes: the refine
@@ -529,9 +484,6 @@ def clusterbreak_spark(
             # the semi-joins just reintroduced.
             .localCheckpoint()
         )
-        if profile is not None:
-            profile["tier_edges"] = round(_time.time() - t0, 3)
-        t0 = _time.time()
         # merged-graph weights: max(caption sim, 1.0 for a tier edge) — tier
         # edges always survive thresholding (thr <= 1), and the SAME weights
         # feed wsum/comp_w below and the refine/distributed recursion, so
@@ -543,17 +495,10 @@ def clusterbreak_spark(
             .agg(F.max("sim").alias("sim"))
             .localCheckpoint()
         )
-        if profile is not None:
-            profile["tier_merge"] = round(_time.time() - t0, 3)
 
-    t0 = _time.time()
     comp, cc_rounds = connected_components(edges)
     comp = comp.persist(cache_lvl)
-    if profile is not None:
-        comp.count()
-        profile["components"] = round(_time.time() - t0, 3)
 
-    t0 = _time.time()
     # global Louvain mass: 2*(sum of kept edge weights) + the sim=1 self-loop
     # of every row in the reference's adjacency matrix (quirk Q6)
     wsum = edges.agg(F.sum("sim")).first()[0] or 0.0
@@ -567,8 +512,6 @@ def clusterbreak_spark(
     # per-round fixed cost (sizes agg, isEmpty probes, localCheckpoints) is
     # pure serial latency that caps scaling efficiency on clean corpora
     max_comp = comp.groupBy("component").count().agg(F.max("count")).first()[0] or 0
-    if profile is not None:
-        profile["aggs"] = round(_time.time() - t0, 3)
     if max_comp <= local_max:
         small, d_rounds = groups0, 0
         spark_ = prs.sparkSession
@@ -661,11 +604,6 @@ def clusterbreak_spark(
         .groupBy("bucket")
         .applyInPandas(refine, ASSIGN_SCHEMA)
     )
-    if profile is not None:
-        t0 = _time.time()
-        assigned = assigned.persist()
-        assigned.count()
-        profile["louvain"] = round(_time.time() - t0, 3)
 
     clusters = assigned.where(F.col("status").startswith("emitted")).select(
         "image_id", "cluster_id"

@@ -108,7 +108,9 @@ def cluster_representatives(
     ``method="majority"`` is the alignment-free tier (per-position vote at
     the median length + signature-agreement medoid); ``method="msa"`` is
     the align-first tier — center-star MSA then column vote (msa.py), the
-    reference's AlignSeqs -> ConsensusSequence shape. The shuffle key is a
+    reference's AlignSeqs -> ConsensusSequence shape. ``signatures`` feeds
+    the majority tier's medoid only and is ignored when ``method="msa"``
+    (the MSA center is the alignment medoid). The shuffle key is a
     hash bucket of cluster_id (``n_buckets`` groups), NOT cluster_id
     itself — many clusters per Python invocation."""
     if method not in ("majority", "msa"):

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def scaled_split_sizes(input_bytes: int, cores: int) -> tuple[int, int]:
@@ -56,11 +59,11 @@ def get_spark(
         # all row-level compute goes through Arrow-batched pandas UDFs
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # FAIR job scheduling: clusterbreak's tier-overlap path materializes
-        # the pixel/substring edge set from a background thread (scheduler
-        # pool "tier") while the caption stages run; FAIR shares task slots
-        # between the two job trees instead of queueing the tier behind a
-        # saturated caption stage. Single-threaded callers are unaffected
+        # FAIR job scheduling: the tier-overlap paths (background() below)
+        # materialize the pixel/substring edge sets from a background thread
+        # (scheduler pool "tier") while the caption stages run; FAIR shares
+        # task slots between the two job trees instead of queueing the tier
+        # behind a saturated caption stage. Single-threaded callers are unaffected
         # (one job at a time behaves identically under FIFO and FAIR).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -69,3 +72,36 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def background(fn: Callable[[], T]) -> Callable[[], T]:
+    """Start fn() on a background thread whose Spark jobs go to the FAIR
+    scheduler pool "tier" (see get_spark) -> join(), which waits for the
+    thread and returns fn's result or re-raises its error.
+
+    The thread is a pyspark.InheritableThread, so it keeps the caller's
+    job group and other local properties. In PySpark's pinned-thread mode
+    (default since 3.2) each Python thread maps to its own JVM thread, so
+    the pool property scopes to this thread's jobs only; under a FIFO-mode
+    context it is a no-op and the jobs still fill idle task slots."""
+    from pyspark import InheritableThread, SparkContext
+
+    out: dict = {}
+
+    def run() -> None:
+        SparkContext.getOrCreate().setLocalProperty("spark.scheduler.pool", "tier")
+        try:
+            out["result"] = fn()
+        except BaseException as e:  # re-raised by join() in the caller
+            out["error"] = e
+
+    th = InheritableThread(target=run, daemon=True)
+    th.start()
+
+    def join() -> T:
+        th.join()
+        if "error" in out:
+            raise out["error"]
+        return out["result"]
+
+    return join

@@ -35,16 +35,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from dynaalign_spark import tiers
 from dynaalign_spark.config import PARITY, SCALE
 from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
 from dynaalign_spark.operators.consensus import cluster_representatives
 from dynaalign_spark.operators.lsh import candidate_pairs
 from dynaalign_spark.operators.signatures import add_signatures
-from dynaalign_spark.operators.simhash import (
-    pixel_edges,
-    row_invariant_violations,
-)
-from dynaalign_spark.session import get_spark
+from dynaalign_spark.operators.simhash import row_invariant_violations
+from dynaalign_spark.session import background, get_spark
 from dynaalign_spark.stages import StageRunner
 
 
@@ -132,73 +130,34 @@ def main(argv=None):
     # substring containment) — each tier's edges are parquet-checkpointed
     # with its own manifest (the resume point), then merged as weight-1
     # edges before connected components. The tier DAGs depend only on
-    # `images`, so their stages run on background threads in scheduler pool
-    # "tier" (FAIR mode, session.py) CONCURRENTLY with signatures/pairs —
-    # same overlap as clusterbreak_spark's tier_overlap, expressed at the
-    # StageRunner level so every stage keeps its checkpoint + manifest.
-    import threading
-
-    tier_threads: list[threading.Thread] = []
-    tier_results: dict = {}
-
-    def _tier_stage(name, fn):
-        def _run():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "tier")
-            try:
-                tier_results[name] = runner.run(name, fn)
-            except BaseException as e:
-                tier_results[name + "_err"] = e
-        th = threading.Thread(target=_run, name=name, daemon=True)
-        tier_threads.append(th)
-        th.start()
-
-    if args.pixel_tier:
-        _tier_stage(
-            "pixel_edges",
-            lambda: pixel_edges(images, cfg, verify_psnr=True).select("a", "b"),
-        )
-    if args.substring_tier:
-        from dynaalign_spark.textops import shared_substring_pairs, suffix_candidates
-
-        caps = images.select("image_id", "caption")
-
-        def _substring_edges():
-            parts = []
-            if args.substring_mode in ("containment", "both"):
-                parts.append(
-                    suffix_candidates(
-                        caps, prefix_len=24, min_suffix=16,
-                        id_col="image_id", text_col="caption",
-                    ).select(F.col("contained").alias("a"),
-                             F.col("container").alias("b"))
-                )
-            if args.substring_mode in ("lcs", "both"):
-                parts.append(
-                    shared_substring_pairs(
-                        caps, min_len=args.substring_min_len,
-                        id_col="image_id", text_col="caption",
-                    ).select("a", "b")
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out.dropDuplicates(["a", "b"])
-
-        _tier_stage("substring_edges", _substring_edges)
+    # `images`, so their stages run in the background (session.background,
+    # FAIR pool "tier") CONCURRENTLY with signatures/pairs — the same helper
+    # clusterbreak_spark's tier_overlap uses, applied at the StageRunner
+    # level so every stage keeps its checkpoint + manifest.
+    builders = tiers.tier_edges(
+        images, cfg, pixel=args.pixel_tier,
+        substring_mode=args.substring_mode if args.substring_tier else None,
+        min_len=args.substring_min_len,
+    )
+    tier_joins = [
+        background(lambda name=name, fn=fn: runner.run(name, fn))
+        for name, fn in builders.items()
+    ]
 
     sig = runner.run("signatures", lambda: add_signatures(images, cfg))
     prs = runner.run("pairs", lambda: candidate_pairs(sig, cfg))
 
-    for th in tier_threads:
-        th.join()
-    for name in ("pixel_edges", "substring_edges"):
-        if name + "_err" in tier_results:
-            raise tier_results[name + "_err"]
-    extra = None
-    for name in ("pixel_edges", "substring_edges"):
-        if name in tier_results:
-            extra = (tier_results[name] if extra is None
-                     else extra.unionByName(tier_results[name]))
+    # join every tier before raising, then raise the first error in tier
+    # order (pixel, then substring)
+    tier_out, errors = [], []
+    for join in tier_joins:
+        try:
+            tier_out.append(join())
+        except BaseException as e:
+            errors.append(e)
+    if errors:
+        raise errors[0]
+    extra = tiers.union_edges(tier_out)
 
     def _cluster():
         res = clusterbreak_spark(

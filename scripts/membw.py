@@ -44,14 +44,30 @@ def _worker(cpu: int, q: mp.Queue) -> None:
     q.put(n * BUF_MB * 2 / 1024 / dt)  # GB/s, read+write
 
 
-def measure(procs: int) -> float:
+def _run_pinned(target, procs: int) -> float:
+    """Sum of `target(cpu, q)` results over `procs` workers, each pinned to
+    its own CPU of this process's affinity mask. The worker count is
+    clamped to the CPUs in the mask: pinning to a CPU outside it fails with
+    EINVAL, and a worker that dies before q.put would leave q.get blocking
+    forever. A worker that does not report within the deadline raises
+    queue.Empty instead of hanging."""
+    cpus = sorted(os.sched_getaffinity(0))[:procs]
     q: mp.Queue = mp.Queue()
-    ps = [mp.Process(target=_worker, args=(i, q)) for i in range(procs)]
+    ps = [mp.Process(target=target, args=(c, q)) for c in cpus]
     for p in ps:
         p.start()
-    for p in ps:
-        p.join()
-    return sum(q.get() for _ in ps)
+    try:
+        return sum(q.get(timeout=SECONDS + 60) for _ in ps)
+    finally:
+        for p in ps:
+            p.join(timeout=5)
+            if p.is_alive():
+                p.kill()
+                p.join()
+
+
+def measure(procs: int) -> float:
+    return _run_pinned(_worker, procs)
 
 
 def _alu_worker(cpu: int, q: mp.Queue) -> None:
@@ -74,14 +90,9 @@ def measure_alu(procs: int) -> float:
     in two runs minutes apart — the substrate's deliverable compute is both
     below 4x and time-varying, which is why bench.py --scaling runs this
     probe in the same time window as the pipeline and reports
-    substrate-normalized efficiency alongside the raw ratio."""
-    q: mp.Queue = mp.Queue()
-    ps = [mp.Process(target=_alu_worker, args=(i, q)) for i in range(procs)]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join()
-    return sum(q.get() for _ in ps)
+    substrate-normalized efficiency alongside the raw ratio. On a host
+    with fewer CPUs than `procs`, it measures one process per CPU."""
+    return _run_pinned(_alu_worker, procs)
 
 
 if __name__ == "__main__":

@@ -200,6 +200,21 @@ def test_msa_golden_drift_gate(spark):
     assert multi and all(r[1] for r in multi)
 
 
+def test_msa_golden_oracle_empty_golden_is_no_oracle(monkeypatch):
+    """An empty golden list yields no oracle (None, rows-only fallback)
+    instead of `values ()`, which is not valid SQL; a non-empty golden
+    still yields the VALUES query."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setenv("DYNA_ORACLE_SF_DIR", "/data/sf0.01")
+    sql = entrymod._duck_msa_golden()
+    assert sql is not None and "from (values (" in sql
+    monkeypatch.setattr(json, "load", lambda f: [])
+    assert entrymod._duck_msa_golden() is None
+
+
 def test_spark_msa_rejects_unknown_method(spark):
     from dynaalign_spark.operators.consensus import cluster_representatives
 

@@ -4,12 +4,19 @@ in a separate scheduler pool while the caption stages (signatures -> pairs ->
 quantile) run, instead of sequencing it after them. The tier DAG depends only
 on `images`, so overlap changes WALL TIME ONLY — these tests pin that the
 cluster output is identical with overlap on and off, on a corpus where the
-tier edges are load-bearing (pixel-only and substring-only planted dups)."""
+tier edges are load-bearing (pixel-only and substring-only planted dups).
+jobs/dedup.py runs its tier stages through the same background-stage helper
+(session.background); the last test covers its failure path."""
+
+import threading
+import time
 
 import numpy as np
 import pytest
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
+from dynaalign_spark import tiers
 from dynaalign_spark.config import PARITY
 from dynaalign_spark.fixtures import (
     encode_ppm,
@@ -18,8 +25,6 @@ from dynaalign_spark.fixtures import (
     phash64,
 )
 from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
-from dynaalign_spark.operators.simhash import pixel_edges
-from dynaalign_spark.textops import suffix_candidates
 
 PIXEL_CAP_A = "quiet harbor lanterns drifting over the winter tide tonight"
 PIXEL_CAP_B = "amber canyon foxes gather beneath the sandstone arches today"
@@ -49,13 +54,10 @@ def tier_images(spark):
 
 
 def _tier_edges(images, cfg):
-    """Same construction as bench.py's scaling worker / jobs/dedup.py."""
-    px = pixel_edges(images, cfg, verify_psnr=True).select("a", "b")
-    sub = suffix_candidates(
-        images.select("image_id", "caption"), prefix_len=24, min_suffix=16,
-        id_col="image_id", text_col="caption",
-    ).select(F.col("contained").alias("a"), F.col("container").alias("b"))
-    return px.unionByName(sub)
+    """The pixel + containment tiers, from the builder the job and the bench
+    use."""
+    return tiers.build_all(tiers.tier_edges(
+        images, cfg, pixel=True, substring_mode="containment"))
 
 
 def _run(images, cfg, overlap):
@@ -92,16 +94,53 @@ def test_overlap_background_failure_propagates(spark, tier_images):
         clusterbreak_spark(tier_images, cfg, extra_edges=bad, tier_overlap=True)
 
 
-def test_profile_mode_stays_sequential(spark, tier_images):
-    """profile= forces the sequential path so per-stage wall times keep
-    their attribution; the profile dict gets the tier_edges key."""
-    cfg = PARITY.with_(size_min=1)
-    prof = {}
-    res = clusterbreak_spark(
-        tier_images, cfg, extra_edges=_tier_edges(tier_images, cfg),
-        profile=prof,
-    )
-    res["clusters"].count()
-    assert "tier_edges" in prof and prof["tier_edges"] >= 0.0
-    for key in ("signatures", "pairs", "components"):
-        res[key].unpersist()
+def test_job_tier_failure_joins_every_tier_then_raises(
+        spark, tier_images, tmp_path, monkeypatch):
+    """jobs/dedup.py, the other call site of the background-stage helper:
+    when one tier's stage fails, main raises that error, writes no manifest
+    for the failed stage, and has joined the other tier's thread first
+    (every tier is joined before the first error in pixel -> substring
+    order is raised)."""
+    import jobs.dedup as job
+
+    def tier_threads():
+        return {t for t in threading.enumerate()
+                if isinstance(t, InheritableThread) and t.is_alive()}
+
+    real = tiers.tier_edges
+    out = tmp_path / "out"
+
+    def failing_pixel_slow_substring(images, cfg, **kw):
+        builders = real(images, cfg, **kw)
+        sub = builders["substring_edges"]
+
+        def slow_substring():
+            # hold this tier until the caption stages are done: the failed
+            # pixel tier is then joined while this one still runs, and a job
+            # that raised on the first error would return before it ends
+            deadline = time.time() + 300
+            while (not (out / "pairs.manifest.json").exists()
+                   and time.time() < deadline):
+                time.sleep(0.1)
+            time.sleep(1)
+            return sub()
+
+        return {
+            "pixel_edges": lambda: images.select(
+                F.col("image_id").alias("a"),
+                F.raise_error(F.lit("pixel tier boom")).alias("b")),
+            "substring_edges": slow_substring,
+        }
+
+    monkeypatch.setattr(tiers, "tier_edges", failing_pixel_slow_substring)
+    src = str(tmp_path / "images.parquet")
+    tier_images.write.parquet(src)
+    argv = ["--input", src, "--output", str(out), "--config", "parity",
+            "--set", "size_min=1", "--pixel-tier", "--substring-tier",
+            "--no-resume"]
+    before = tier_threads()
+    with pytest.raises(Exception, match="pixel tier boom"):
+        job.main(argv)
+    assert not (out / "pixel_edges.manifest.json").exists()
+    assert (out / "substring_edges.manifest.json").exists()
+    assert tier_threads() <= before
