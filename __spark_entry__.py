@@ -836,7 +836,7 @@ def _duck_capped_cand(cap: int | None = None, cw: int | None = None,
                       nh: float | None = None) -> str:
     """CTE chain ``bg/br/emit/agp`` ending in ``cand (a, b, cnt, sim)`` — the
     band-EMISSION twin of lsh.candidate_pairs under PARITY (r=1,
-    count_agreement), including the hot-band skew machinery the old oracle
+    count-based agreement), including the hot-band skew machinery the old oracle
     assumed away: a (h, comp) band group of size <= band_group_cap emits all
     i<j pairs; a larger group emits sorted-chain pairs only (each member to
     its next chain_width successors by image_id — lsh.py ``chain_pairs``),

@@ -5,9 +5,11 @@ Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 --scaling: the north-rule two-cluster-size evidence — runs the identical
-dedup job on the identical input at local[8] and local[32] in fresh
-subprocesses (one JVM each), reports images/sec at both and
-efficiency = tput(32) / (4 * tput(8)). Results land in BENCH.md.
+dedup job on the identical input at local[N/4] and local[N] (N = the CPUs
+in this process's affinity mask) in fresh subprocesses (one JVM each),
+reports images/sec at both and efficiency = tput(N) / (4 * tput(N/4)).
+Results land in BENCH.md. Every dedup query runs the job's stage list
+(stages.dedup_clusters) in memory.
 
 The dedup headline runs over a deterministic synthetic `images` table
 (BASELINE.json input_hint shape; fixtures.make_images, cached as parquet
@@ -27,19 +29,28 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+HOST_CPUS = len(os.sched_getaffinity(0))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(HOST_CPUS))
 CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_data")
 IMAGES_N_CLUSTERS = 1200      # ~8.6k rows: the per-round bench table
 SCALING_N_ROWS = int(os.environ.get("DYNA_SCALE_ROWS", "6400000"))
                               # the two-cluster-size scaling table (sized so
                               # per-core work dominates fixed driver overhead
-                              # at local[8] vs local[32] — the efficiency
+                              # at local[N/4] vs local[N] — the efficiency
                               # denominator is honest parallel work)
 IMAGES_SEED = 42
 
-# Same JVM heap at every parallelism level (local mode: driver == executor).
-# The 8g default causes GC thrash at the 22M-pair shuffle (2x wall time).
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
+
+def _mem_available_gb() -> int:
+    """MemAvailable in whole GiB (0 when /proc/meminfo is unreadable)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(next(ln for ln in f if ln.startswith("MemAvailable")).split()[1])
+        return kb // (1024 * 1024)
+    except (OSError, StopIteration, IndexError, ValueError):
+        return 0
+
+
 # Shuffle files on tmpfs: in local mode every "executor" shares one disk, so
 # shuffle I/O is a serial constant that poisons the N-vs-4N comparison; a
 # real cluster gives each executor its own local NVMe. tmpfs restores the
@@ -123,29 +134,17 @@ def bench_queries(spark):
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
-    from dynaalign_spark import annsearch, textops, tiers
-    from dynaalign_spark.config import SCALE
-    from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
+    from dynaalign_spark import annsearch, textops
 
     img_path = images_parquet(spark)
 
     def dedup_images():
-        images = spark.read.parquet(img_path)
-        res = clusterbreak_spark(
-            images, SCALE.with_(size_max=50, size_min=1,
-                                cache_storage=_default_storage()))
-        return res["clusters"]
+        return dedup(spark, spark.read.parquet(img_path), [])
 
     def dedup_multitier():
         """The north-rule multi-signal merge: caption MinHash ∪ pixel
         SimHash ∪ substring containment edges -> one cluster assignment."""
-        images = spark.read.parquet(img_path)
-        cfg = SCALE.with_(size_max=50, size_min=1,
-                          cache_storage=_default_storage())
-        extra = tiers.build_all(tiers.tier_edges(
-            images, cfg, pixel=True, substring_mode="containment"))
-        res = clusterbreak_spark(images, cfg, extra_edges=extra)
-        return res["clusters"]
+        return dedup(spark, spark.read.parquet(img_path), ["pixel", "substring"])
 
     def minhash_signatures():
         return entrymod.q_minhash_signatures(spark, SF_DIR)
@@ -180,6 +179,20 @@ def bench_queries(spark):
         "window_user_latest": lambda: entrymod.q_window_user_latest(spark, SF_DIR),
     }
     return qs, img_path
+
+
+def dedup(spark, images, tier_names: list[str]):
+    """The job's stage list (stages.dedup_clusters) in memory, under the
+    bench config, with the named tiers ("pixel", "substring") -> clusters."""
+    from dynaalign_spark import tiers
+    from dynaalign_spark.config import SCALE
+    from dynaalign_spark.stages import StageRunner, dedup_clusters
+
+    cfg = SCALE.with_(size_max=50, size_min=1, cache_storage=_default_storage())
+    builders = tiers.tier_edges(
+        images, cfg, pixel="pixel" in tier_names,
+        substring_mode="containment" if "substring" in tier_names else None)
+    return dedup_clusters(images, cfg, StageRunner(spark, None), builders)["clusters"]
 
 
 def _substrate_probe() -> dict:
@@ -243,11 +256,8 @@ def run_bench() -> dict:
     }
 
 
-def _worker_dedup(cpus: int, n_reps: int = 2) -> None:
+def _worker_dedup(cpus: int) -> None:
     """Subprocess body: one dedup job at local[cpus]; prints a JSON line."""
-    from dynaalign_spark import tiers
-    from dynaalign_spark.config import SCALE
-    from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
     from dynaalign_spark.session import get_spark
 
     # shuffle partitions = cores at both parallelism levels (a scale-invariant
@@ -261,43 +271,21 @@ def _worker_dedup(cpus: int, n_reps: int = 2) -> None:
     path = scaling_parquet(spark)
     images = spark.read.parquet(path)
     n = images.count()
-    cfg = SCALE.with_(size_max=50, size_min=1, cache_storage=_default_storage())
     scale_tiers = _scale_tiers()
-
-    def run_once(imgs):
-        # DYNA_TIERS edge union, from the same builder as dedup_multitier
-        # and jobs/dedup.py
-        extra = tiers.build_all(tiers.tier_edges(
-            imgs, cfg, pixel="pixel" in scale_tiers,
-            substring_mode="containment" if "substring" in scale_tiers else None))
-        return clusterbreak_spark(imgs, cfg, extra_edges=extra)
 
     # warm the JVM (JIT), the Python UDF worker pool, and the parquet cache
     # with a miniature end-to-end run, so the timed run measures steady-state
     # throughput — the same warmup at both parallelism levels (what a real
     # long-lived cluster job sees after its first minutes)
-    warm = run_once(images.limit(20_000))
-    warm["clusters"].count()
-    warm["signatures"].unpersist()
-    warm["pairs"].unpersist()
-    warm["components"].unpersist()
-    # min-of-n_reps repetitions: single-shot local-mode timings swing +-20%
-    # with GC/page-cache state; the minimum is the standard steady-state
-    # estimate and is applied identically at both parallelism levels.
-    # (The interleaved scaling schedule calls this with n_reps=1 and takes
-    # its min across invocations instead.)
-    reps = []
-    n_out = 0
-    for _ in range(n_reps):
-        t0 = time.time()
-        res = run_once(images)
-        n_out = res["clusters"].count()
-        reps.append(time.time() - t0)
-        for key in ("signatures", "pairs", "components"):
-            res[key].unpersist()
-    dt = min(reps)
+    dedup(spark, images.limit(20_000), scale_tiers).count()
+    # one timed run: single-shot local-mode timings swing +-20% with
+    # GC/page-cache state, so run_scaling takes the minimum across its
+    # interleaved invocations, identically at both parallelism levels
+    t0 = time.time()
+    n_out = dedup(spark, images, scale_tiers).count()
+    dt = time.time() - t0
     print(json.dumps({"cpus": cpus, "rows": n, "out": n_out, "sec": round(dt, 3),
-                      "reps": [round(r, 3) for r in reps], "tiers": scale_tiers,
+                      "reps": [round(dt, 3)], "tiers": scale_tiers,
                       "images_per_sec": round(n / dt, 1)}))
     spark.stop()
 
@@ -360,25 +348,18 @@ def _offheap_size() -> str:
         if re.fullmatch(r"\d+[kmgt]?b?", raw or ""):
             return "0" if re.fullmatch(r"0+[kmgt]?b?", raw) else raw
         return "0"
-    try:
-        avail_kb = int(
-            next(ln for ln in open("/proc/meminfo") if "MemAvailable" in ln)
-            .split()[1]
-        )
-        avail_gb = avail_kb // (1024 * 1024)
-    except Exception:
-        avail_gb = 0
+    avail_gb = _mem_available_gb()
     if avail_gb >= 64:
         return "16g"
     return f"{max(1, avail_gb // 4)}g" if avail_gb >= 4 else "0"
 
 
-def _default_storage(extra: dict | None = None) -> str:
+def _default_storage() -> str:
     """Stage-cache StorageLevel paired with the FINAL resolved off-heap conf
     (ADVICE r03 #3): DYNA_CONF can override the off-heap defaults via
     _env_extra's setdefault, and OFF_HEAP with a disabled/zero pool silently
     fails to cache — so decide from the merged conf, not DYNA_OFFHEAP."""
-    conf = _env_extra() if extra is None else extra
+    conf = _env_extra()
     enabled = conf.get("spark.memory.offHeap.enabled", "false").lower() == "true"
     size = conf.get("spark.memory.offHeap.size", "0").strip().lower()
     off = not enabled or not size or re.fullmatch(r"0+[kmgt]?b?", size)
@@ -390,8 +371,8 @@ def _worker_gen() -> None:
     so neither timed worker pays generation cost."""
     from dynaalign_spark.session import get_spark
 
-    spark = get_spark(app="dedup-scale-gen", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark(app="dedup-scale-gen", master=f"local[{HOST_CPUS}]",
+                      shuffle_partitions=HOST_CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     scaling_parquet(spark)
     spark.stop()
@@ -400,7 +381,8 @@ def _worker_gen() -> None:
 def run_scaling() -> dict:
     """N vs 4N cores on identical input -> scaling efficiency.
 
-    DYNA_SCALE_CPUS='n,4n' picks the two levels (default 8,32). Each level is
+    DYNA_SCALE_CPUS='n,4n' picks the two levels (default: a quarter of the
+    affinity mask's CPUs, at least 1, and all of them). Each level is
     pinned to exactly its core budget with taskset (cpus 0-(n-1)): without
     the pin, the local[n] JVM's GC threads, Spark internal pools, and
     Python/Arrow UDF worker processes free-ride on the idle cores,
@@ -408,7 +390,8 @@ def run_scaling() -> dict:
     4N-cluster to borrow from. Java and Python both derive their thread-pool
     sizes from sched_getaffinity, so the pin confines everything.
     """
-    lo, hi = (int(c) for c in os.environ.get("DYNA_SCALE_CPUS", "8,32").split(","))
+    default = f"{max(1, HOST_CPUS // 4)},{HOST_CPUS}"
+    lo, hi = (int(c) for c in os.environ.get("DYNA_SCALE_CPUS", default).split(","))
     factor = hi / lo
     subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker-gen"],
@@ -440,12 +423,11 @@ def run_scaling() -> dict:
     # pipeline story at all (BENCH.md). Interleaving cannot stop the grant
     # from moving, but it stops the ordering from loading the dice for
     # either level.
-    schedule = [(lo, 1), (hi, 1), (lo, 1), (hi, 1)]
+    schedule = [lo, hi, lo, hi]
     runs: dict[int, list] = {lo: [], hi: []}
     sub = {"before": substrate_eff()}
-    for cpus, n_reps in schedule:
-        cmd = [sys.executable, os.path.abspath(__file__), "--worker",
-               str(cpus), str(n_reps)]
+    for cpus in schedule:
+        cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(cpus)]
         if shutil.which("taskset") and (os.cpu_count() or 0) >= cpus:
             cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
         # DYNA_WORKER_TIMEOUT: on a throttled hypervisor window the same leg
@@ -495,8 +477,6 @@ def run_skew() -> dict:
     corpus-sized band group, the case the group cap + chain pairing exists
     for. Prints wall/throughput + the uniform-corpus comparison is made in
     BENCH.md within the same substrate window."""
-    from dynaalign_spark.config import SCALE
-    from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
     from dynaalign_spark.session import get_spark
 
     n_rows = int(os.environ.get("DYNA_SCALE_ROWS", "1600000"))
@@ -514,18 +494,13 @@ def run_skew() -> dict:
                                dup_frac=frac).write.parquet(path)
     images = spark.read.parquet(path)
     n = images.count()
-    cfg = SCALE.with_(size_max=50, size_min=1,
-                      cache_storage=_default_storage())
     reps = []
-    n_clusters = None
     for _ in range(2):
         t0 = time.time()
-        res = clusterbreak_spark(images, cfg)
-        n_assigned = res["clusters"].count()
+        clusters = dedup(spark, images, [])
+        n_assigned = clusters.count()
         reps.append(round(time.time() - t0, 1))
-        n_clusters = res["clusters"].select("cluster_id").distinct().count()
-        for key in ("signatures", "pairs", "components"):
-            res[key].unpersist()
+        n_clusters = clusters.select("cluster_id").distinct().count()
     spark.stop()
     wall = min(reps)
     return {
@@ -635,11 +610,16 @@ def run_jaccard_ab() -> dict:
 
 if __name__ == "__main__":
     use_shm_local_dirs()
+    # Same JVM heap at every parallelism level (local mode: driver ==
+    # executor). The 8g default causes GC thrash at the 22M-pair shuffle (2x
+    # wall time); 40% of MemAvailable is 32g (the cap) on a 126 GB box and 5g
+    # on a 15 GB one. Worker subprocesses inherit it.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY",
+                          f"{max(1, min(32, _mem_available_gb() * 2 // 5))}g")
     if len(sys.argv) > 1 and sys.argv[1] == "--worker-gen":
         _worker_gen()
     elif len(sys.argv) > 2 and sys.argv[1] == "--worker":
-        _worker_dedup(int(sys.argv[2]),
-                      n_reps=int(sys.argv[3]) if len(sys.argv) > 3 else 2)
+        _worker_dedup(int(sys.argv[2]))
     elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
         print(json.dumps(run_scaling()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--skew":
@@ -652,7 +632,7 @@ if __name__ == "__main__":
         raise SystemExit(
             f"unknown mode {sys.argv[1]!r}; modes: --scaling | --skew | "
             f"--jaccard-ab | "
-            f"--worker N [reps] | --worker-gen | "
+            f"--worker N | --worker-gen | "
             f"(none = per-round bench at $SPARK_GRAFT_SF_DIR)"
         )
     else:

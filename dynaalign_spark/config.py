@@ -96,12 +96,6 @@ class DedupConfig:
     simhash_kernel: str = "int"
     psnr_threshold_db: float = 40.0
 
-    # suffix / substring tier
-    suffix_prefix_len: int = 8
-
-    # threshold estimation
-    exact_threshold_max_rows: int = 5000   # below this, exact all-pairs quantile
-    threshold_sample_pairs: int = 2_000_000
     # signature verify-join strategy: corpora up to this many rows broadcast
     # the (int-cast) signature table instead of shuffling it per pair —
     # ~200B/row, so 8M rows ~= 1.6 GB broadcast, fine for multi-GB executors;
@@ -123,11 +117,6 @@ class DedupConfig:
     # coupling the stages (BENCH.md scaling analysis); on a cluster the
     # off-heap analog is MEMORY_AND_DISK_SER / executor off-heap memory.
     cache_storage: str = "MEMORY_AND_DISK"
-
-    # r=1 only: derive pair agreement from the band-collision count
-    # (sim = #colliding bands / n_hash — exact, see lsh.candidate_pairs)
-    # instead of re-fetching signatures through a broadcast/shuffle join.
-    count_agreement: bool = True
 
     def __post_init__(self):
         if not self.seeds:

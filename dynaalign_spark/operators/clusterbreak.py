@@ -370,6 +370,34 @@ def _distributed_break(
     return small, solo, unb, rounds
 
 
+def _zero_quantile(cfg: DedupConfig, n_valid: int) -> bool:
+    """Zero-quantile shortcut: the LSH pair generator emits at most
+    bands * n * max((cap-1)/2, chain_width) candidates (every other pair's
+    sim is an exact 0 under r=1; an undercount under r>=2, which only adds
+    zeros), so whenever the p-rank of the full n(n-1)/2 distribution
+    provably lands inside the zero block, the reference quantile is 0.0 and
+    the effective threshold is the configured floor. Then the floor can be
+    pushed INTO the verify stage (caption_pairs), so sub-floor pairs are
+    never persisted or shuffled downstream — at web scale this is always
+    the taken path, exactly mirroring the documented max(quantile, floor)
+    composition (R quantile semantics preserved verbatim below the cutoff)."""
+    total = n_valid * (n_valid - 1) // 2
+    m_ub = cfg.bands * n_valid * max((cfg.band_group_cap - 1) / 2, cfg.chain_width)
+    return zero_quantile_certain(total, m_ub, cfg.thresh_p)
+
+
+def caption_pairs(signatures: DataFrame, cfg: DedupConfig,
+                  n_valid: int | None = None) -> DataFrame:
+    """The caption tier's (a, b, sim) candidate pairs, as clusterbreak_spark
+    thresholds them: the configured floor is pushed into the verify stage
+    when the quantile is provably zero, and ``n_valid`` (the rows with a
+    signature; counted when None) sizes the verify join's broadcast."""
+    if n_valid is None:
+        n_valid = signatures.where(F.col("minhash").isNotNull()).count()
+    floor = cfg.min_edge_sim if _zero_quantile(cfg, n_valid) else 0.0
+    return candidate_pairs(signatures, cfg, sim_floor=floor, n_rows_hint=n_valid)
+
+
 def clusterbreak_spark(
     images: DataFrame,
     cfg: DedupConfig,
@@ -384,7 +412,11 @@ def clusterbreak_spark(
 
     Returns keys: signatures, pairs, threshold, edges, components,
     assignments, clusters (image_id, cluster_id), filtered (image_id,
-    reason), cc_rounds, distributed_rounds.
+    reason), cc_rounds, distributed_rounds, n_valid, and cached (the frames
+    this call persisted, for the caller to release).
+
+    ``signatures`` / ``pairs``: precomputed add_signatures / caption_pairs
+    output (the job's checkpointed stages); computed here when None.
 
     ``extra_edges``: optional (a, b) pairs from OTHER dedup tiers (pixel
     SimHash, caption-substring containment — the north rule's multi-signal
@@ -435,27 +467,8 @@ def clusterbreak_spark(
         "image_id", F.lit("empty_shingle_set").alias("reason")
     )
 
-    # zero-quantile shortcut: the LSH pair generator emits at most
-    # bands * n * max((cap-1)/2, chain_width) candidates (every other pair's
-    # sim is an exact 0 under r=1; an undercount under r>=2, which only adds
-    # zeros), so whenever the p-rank of the full n(n-1)/2 distribution
-    # provably lands inside the zero block, the reference quantile is 0.0 and
-    # the effective threshold is the configured floor. Then the floor can be
-    # pushed INTO the verify stage (sim_floor), so sub-floor pairs are never
-    # persisted or shuffled downstream — at web scale this is always the
-    # taken path, exactly mirroring the documented max(quantile, floor)
-    # composition (R quantile semantics preserved verbatim below the cutoff).
-    total = n_valid * (n_valid - 1) // 2
-    m_ub = cfg.bands * n_valid * max((cfg.band_group_cap - 1) / 2, cfg.chain_width)
-    zero_quantile = zero_quantile_certain(total, m_ub, cfg.thresh_p)
-    if pairs is not None:
-        prs = pairs
-    else:
-        prs = candidate_pairs(
-            sig, cfg,
-            sim_floor=cfg.min_edge_sim if zero_quantile else 0.0,
-            n_rows_hint=n_valid,
-        )
+    zero_quantile = _zero_quantile(cfg, n_valid)
+    prs = pairs if pairs is not None else caption_pairs(sig, cfg, n_valid)
     prs = prs.persist(cache_lvl)
     if zero_quantile:
         thr = cfg.min_edge_sim
@@ -520,8 +533,9 @@ def clusterbreak_spark(
     else:
         prs_db = prs
         prs_db_persisted = False
-        if pairs is None and zero_quantile and cfg.min_edge_sim > 0.0:
-            # The pushed floor stripped 0 < sim < floor pairs from prs, but
+        if zero_quantile and cfg.min_edge_sim > 0.0:
+            # The pushed floor (caption_pairs, whether called here or by the
+            # caller) stripped 0 < sim < floor pairs from prs, but
             # the reference recursion re-quantiles each oversized subset's
             # FULL sim distribution (R/clusterbreak.R:246-254) — treating the
             # dropped pairs as exact zeros would bias deep-level thresholds
@@ -650,4 +664,7 @@ def clusterbreak_spark(
         "cc_rounds": cc_rounds,
         "distributed_rounds": d_rounds,
         "n_valid": n_valid,
+        # every frame this call may have persisted, dependents first; the
+        # caller unpersists them once `clusters` is materialized
+        "cached": [comp_w, comp, prs, sig],
     }

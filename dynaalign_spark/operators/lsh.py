@@ -136,7 +136,7 @@ def candidate_pairs(
     # Catalyst/AQE broadcasts the routing joins; on the degenerate
     # all-identical corpus it is corpus-sized and a shuffled join is the
     # right plan anyway.
-    if cfg.rows_per_band == 1 and cfg.count_agreement:
+    if cfg.rows_per_band == 1:
         flagged = groups.select(
             F.explode(pair_col).alias("p"),
             (F.size("ids") > cap).alias("capped"),

@@ -1,19 +1,15 @@
 """The shippable dedup job (north rule: `spark-submit --py-files dist/engine.zip
 jobs/dedup.py --input ... --output ...`).
 
-Pipeline: images parquet/Iceberg -> MinHash signatures (caption shingles, with
-optional phash bit-shingle fusion) -> LSH candidate pairs -> global type-7
-quantile threshold (composed with the scale noise floor) -> thresholded edges
--> union of the optional SimHash pixel tier's and caption-substring tier's
-edges (--pixel-tier / --substring-tier, with --substring-mode selecting
-whole-caption containment, shared-region LCS via the distributed generalized
-suffix array, or both; the north rule's multi-signal merge)
--> connected components + size-constrained cluster breaking (distributed
-re-threshold recursion above local_max, exact in-memory Louvain recursion
-below) -> clusters / filtered -> per-cluster consensus + medoid exemplar ->
-per-row invariant audit.
+Pipeline: images parquet/Iceberg -> dynaalign_spark.stages.dedup_clusters,
+the stage list bench.py also runs (MinHash signatures -> LSH candidate pairs
+∪ the optional pixel-SimHash / caption-substring tier edges -> threshold ->
+connected components + size-constrained cluster breaking -> clusters) ->
+filtered -> per-cluster consensus + medoid exemplar -> per-row invariant
+audit. Tiers: --pixel-tier, --substring-tier with --substring-mode
+containment / lcs / both.
 
-Every major stage is parquet-checkpointed with a metrics/lineage manifest
+Every stage is parquet-checkpointed with a metrics/lineage manifest
 (dynaalign_spark.stages.StageRunner); a re-run resumes after the last
 complete stage. Kill it anywhere, run the same command, get the same bytes.
 
@@ -37,13 +33,10 @@ from pyspark.sql import functions as F
 
 from dynaalign_spark import tiers
 from dynaalign_spark.config import PARITY, SCALE
-from dynaalign_spark.operators.clusterbreak import clusterbreak_spark
 from dynaalign_spark.operators.consensus import cluster_representatives
-from dynaalign_spark.operators.lsh import candidate_pairs
-from dynaalign_spark.operators.signatures import add_signatures
 from dynaalign_spark.operators.simhash import row_invariant_violations
-from dynaalign_spark.session import background, get_spark
-from dynaalign_spark.stages import StageRunner
+from dynaalign_spark.session import get_spark
+from dynaalign_spark.stages import StageRunner, dedup_clusters
 
 
 def parse_args(argv=None):
@@ -114,10 +107,8 @@ def main(argv=None):
            if args.substring_tier else b"")
         # consensus method is part of the config fingerprint: switching
         # --consensus must invalidate the checkpointed representatives
-        # stage, not resume past it ("majority" keeps the historical
-        # fingerprint so existing checkpoint chains stay resumable)
-        + (b"" if args.consensus == "majority"
-           else f"cons:{args.consensus}".encode())
+        # stage, not resume past it
+        + f"cons:{args.consensus}".encode()
     ).hexdigest()[:16]
     runner = StageRunner(spark, args.output, resume=not args.no_resume,
                          config_fingerprint=fp)
@@ -126,46 +117,15 @@ def main(argv=None):
 
     images = read_images(spark, args.input)
 
-    # multi-signal tiers (north rule: caption MinHash ∪ pixel SimHash ∪
-    # substring containment) — each tier's edges are parquet-checkpointed
-    # with its own manifest (the resume point), then merged as weight-1
-    # edges before connected components. The tier DAGs depend only on
-    # `images`, so their stages run in the background (session.background,
-    # FAIR pool "tier") CONCURRENTLY with signatures/pairs — the same helper
-    # clusterbreak_spark's tier_overlap uses, applied at the StageRunner
-    # level so every stage keeps its checkpoint + manifest.
+    # the library's stage list: signatures, pairs and the tier stages, then
+    # clusters, each with its own checkpoint and manifest
     builders = tiers.tier_edges(
         images, cfg, pixel=args.pixel_tier,
         substring_mode=args.substring_mode if args.substring_tier else None,
         min_len=args.substring_min_len,
     )
-    tier_joins = [
-        background(lambda name=name, fn=fn: runner.run(name, fn))
-        for name, fn in builders.items()
-    ]
-
-    sig = runner.run("signatures", lambda: add_signatures(images, cfg))
-    prs = runner.run("pairs", lambda: candidate_pairs(sig, cfg))
-
-    # join every tier before raising, then raise the first error in tier
-    # order (pixel, then substring)
-    tier_out, errors = [], []
-    for join in tier_joins:
-        try:
-            tier_out.append(join())
-        except BaseException as e:
-            errors.append(e)
-    if errors:
-        raise errors[0]
-    extra = tiers.union_edges(tier_out)
-
-    def _cluster():
-        res = clusterbreak_spark(
-            images, cfg, signatures=sig, pairs=prs, extra_edges=extra
-        )
-        return res["clusters"]
-
-    clusters = runner.run("clusters", _cluster)
+    staged = dedup_clusters(images, cfg, runner, builders)
+    sig, clusters = staged["signatures"], staged["clusters"]
 
     def _filtered():
         # recompute cheap filtered set relative to emitted clusters
@@ -175,7 +135,7 @@ def main(argv=None):
             .select("image_id", F.lit("filtered_or_below_size_min").alias("reason"))
         )
 
-    filtered = runner.run("filtered", _filtered)
+    runner.run("filtered", _filtered)
 
     reps = runner.run(
         "representatives",
@@ -184,6 +144,17 @@ def main(argv=None):
         ),
     )
 
+    runner.run(
+        "invariant_violations",
+        lambda: row_invariant_violations(
+            images, clusters.join(images, "image_id"), cfg
+        ),
+    )
+    # every count comes from the stage manifests (add_signatures keeps one
+    # row per image, representatives one per cluster)
+    rows = {st["stage"]: st["rows"] for st in runner.log}
+    n_viol = rows["invariant_violations"]
+
     if args.plots:
         # the reference workflow's final step (clusterconsensus ->
         # consensusplot / plot_similarity_matrix); viz is driver-side on the
@@ -191,7 +162,7 @@ def main(argv=None):
         from dynaalign_spark import viz
 
         rep_rows = reps.select("cluster_id", "consensus_caption").collect() \
-            if reps.count() <= viz.MAX_VIZ_ROWS else None
+            if rows["representatives"] <= viz.MAX_VIZ_ROWS else None
         if rep_rows is None:
             print(f"--plots skipped: >{viz.MAX_VIZ_ROWS} clusters "
                   "(viz is a test-scale artifact)", file=sys.stderr)
@@ -206,23 +177,15 @@ def main(argv=None):
             viz.plot_similarity_matrix(
                 1.0 - dist, path=os.path.join(plots_dir, "similarity.png"))
 
-    violations = runner.run(
-        "invariant_violations",
-        lambda: row_invariant_violations(
-            images, clusters.join(images, "image_id"), cfg
-        ),
-    )
-    n_viol = violations.count()
-
     runner.write_summary(
         {
             "input": args.input,
             "config": args.config,
             "config_fingerprint": fp,
-            "n_images": images.count(),
-            "n_clustered": clusters.count(),
-            "n_filtered": filtered.count(),
-            "n_clusters": reps.count(),
+            "n_images": rows["signatures"],
+            "n_clustered": rows["clusters"],
+            "n_filtered": rows["filtered"],
+            "n_clusters": rows["representatives"],
             "invariant_violations": n_viol,
         }
     )

@@ -37,7 +37,7 @@ def _job_cmd(out_dir: str) -> list[str]:
         sys.executable, os.path.join(REPO, "jobs", "dedup.py"),
         "--input", INPUT, "--output", out_dir,
         "--config", "scale", "--set", "size_max=50", "--set", "size_min=1",
-        "--master", "local[32]",
+        "--master", f"local[{len(os.sched_getaffinity(0))}]",
     ]
 
 

@@ -88,6 +88,40 @@ def test_tiers_merge_into_flagship_clusters(spark, multitier_input, tmp_path):
     assert _clusters(spark, out) == cl
 
 
+def test_dedup_clusters_in_memory_matches_parquet_runner(
+        spark, multitier_input, tmp_path, monkeypatch):
+    """dedup_clusters, the stage list the job and bench.py share, gives the
+    same clusters on the job's parquet StageRunner and on the bench's
+    in-memory one (pixel + substring tiers on), and the in-memory runner
+    writes no files."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dynaalign_spark import tiers
+    from dynaalign_spark.config import PARITY
+    from dynaalign_spark.stages import StageRunner, dedup_clusters
+
+    cfg = PARITY.with_(size_min=1)
+    images = spark.read.parquet(multitier_input)
+
+    def clusters(runner):
+        builders = tiers.tier_edges(images, cfg, pixel=True,
+                                    substring_mode="containment")
+        out = dedup_clusters(images, cfg, runner, builders)["clusters"]
+        return {(r["image_id"], r["cluster_id"]) for r in out.collect()}
+
+    on_disk = clusters(StageRunner(spark, str(tmp_path / "out"), resume=False))
+
+    def no_writes(*a, **kw):
+        raise AssertionError("the in-memory runner wrote parquet")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", no_writes)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    assert clusters(StageRunner(spark, None)) == on_disk
+    assert not os.listdir(cwd)
+
+
 def test_lcs_substring_mode_connects_shared_region_dups(spark, multitier_input,
                                                         tmp_path):
     """VERDICT r02 #8: the LCS tier must be reachable from the shipped job.
